@@ -638,7 +638,7 @@ object SparkEntry {
     "ann_bucket_topk" -> ((s, d) => Similarity.bucketTopK(T(s, d, "embeddings"))),
     "ann_ivf_topk" -> ((s, d) => Similarity.ivfTopK(T(s, d, "embeddings"))),
 
-    // --- IVF index LIFECYCLE: the cell-partitioned vector store built
+    // --- IVF index LIFECYCLE: the cell-tagged vector store built
     //     in TWO generations (even vectors indexed first, odd appended
     //     against the same frozen centroids) and probed as one — must
     //     hash-match the single-build oracle, proving append ≡ rebuild

@@ -45,6 +45,17 @@ object Portable {
     floor(c * lit(p) + lit(0.5)) / lit(p)
   }
 
+  /** Scalar twin of the Column [[fx]], for driver-side code that must
+    * rank exactly as a Spark plan would. Spark's `floor` returns BIGINT,
+    * so the floored value passes through a `Long` before the divide:
+    * NaN becomes 0 and ±∞ saturate at the `Long` range, which a plain
+    * `math.floor(x) / p` would not reproduce. `PortableSpec` pins this
+    * twin to the Column form bit for bit. */
+  def fx(x: Double, n: Int): Double = {
+    val p = math.pow(10, n)
+    math.floor(x * p + 0.5).toLong / p
+  }
+
   /** Half-up to a whole number: floor(x + 0.5) — the n = 0 case.
     * Spark's floor returns BIGINT; cast DuckDB's to match when the
     * value is hashed. */

@@ -1,8 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 
 /** Similarity search over `embeddings(vec_id, embedding FLOAT[], label)`.
   *
@@ -362,9 +366,9 @@ object Similarity {
   }
 
   /** IVF (inverted-file) ANN top-k — the index-structured scale path
-    * beside the hash-structured [[bucketTopK]]: vectors are PARTITIONED
-    * into cells by nearest coarse centroid, and a query scans only its
-    * `nProbe` closest cells instead of the collection.
+    * beside the hash-structured [[bucketTopK]]: vectors are assigned to
+    * cells by nearest coarse centroid, and a query scores only the
+    * vectors of its `nProbe` closest cells instead of the collection.
     *
     * Centroids here are the vectors with `vec_id < nCells` — a
     * deterministic stand-in for an offline-trained k-means coarse
@@ -374,10 +378,12 @@ object Similarity {
     * tie-break, so the oracle reproduces it bit-for-bit.
     *
     * Scale shape: centroids are bounded by construction (broadcast);
-    * assignment is one scan of the collection; the probe is an
-    * equi-join on the cell id (shuffle-on-cell, no cartesian). Recall
-    * vs cost is `nProbe/nCells`; at 100 TB you raise `nCells` (smaller
-    * cells) and keep `nProbe` small. */
+    * assignment is one scan of the collection; the probe is EAGER
+    * ([[ivfProbe]]): the query batch and the |q|·k result live on the
+    * driver, and the index is scanned once, filtered on the probed
+    * cells, with a top-k per partition and no shuffle. Recall vs cost
+    * is `nProbe/nCells`; at 100 TB you raise `nCells` (smaller cells)
+    * and keep `nProbe` small. */
   def ivfTopK(emb: DataFrame, maxQueryId: Long = 10, k: Int = 3,
               nCells: Int = 16, nProbe: Int = 2,
               centroids: Option[DataFrame] = None): DataFrame = {
@@ -388,9 +394,12 @@ object Similarity {
   }
 
   /** The IVF INDEX artifact: each vector assigned to its nearest
-    * coarse centroid — `(vec_id, emb, cell)`, the cell-partitioned
-    * vector store a production deployment persists (and, for IVF-flat,
-    * IS the index). Assignment is per-row against the broadcast
+    * coarse centroid — `(vec_id, emb, cell)`, the vector store a
+    * production deployment persists (and, for IVF-flat, IS the index).
+    * The rows are tagged with their cell, NOT partitioned by it: the
+    * eager [[ivfProbe]] scans every partition once and filters on the
+    * probed cells, holding only the query batch and the |q|·k result
+    * on the driver. Assignment is per-row against the broadcast
     * centroids, which yields the lifecycle property for free and BY
     * CONSTRUCTION: appending a new generation of vectors
     * (`ivfAssign(newVecs, cents)`, union) produces bit-identical rows
@@ -420,36 +429,134 @@ object Similarity {
       .select(col("vec_id"), col("emb"), col("cid").as("cell"))
   }
 
-  /** Probe a (possibly loaded-from-storage) IVF index: queries pick
-    * their `nProbe` closest cells against the broadcast centroids and
-    * scan only those cells' vectors. */
+  /** Probe a (possibly loaded-from-storage) IVF index. EAGER: the call
+    * runs the probe and returns its `(qid, nn_id, cos)` rows as a local
+    * DataFrame. Over a cached index and a local query batch, a request
+    * is two narrow Spark jobs and no shuffle — REPOSE's shape (a
+    * partition-local scan, a top-k per partition, a global merge):
+    *
+    *  1. `cents` is collected as given (one job; centroids are bounded
+    *     by construction). It is not wrapped in a derived Dataset, which
+    *     Spark would analyse and plan again on every call.
+    *  2. the query batch — only its `vec_id < maxQueryId` rows — is
+    *     collected, and each query picks its `nProbe` cells on the
+    *     driver: pinned cosine descending (NULL last), then `cid`, with
+    *     the same [[graft.functions.VecMath]] kernel and the scalar twin
+    *     of [[graft.functions.Portable.fx]], so the choice is the one a
+    *     plan would make.
+    *  3. one scan of `index`, through the caller's own physical plan
+    *     (planned once per DataFrame, however often it is probed), keeps
+    *     the rows of probed cells, scores them against the queries that
+    *     probe the cell, skips `qid == vec_id`, and keeps a bounded
+    *     top-k per query in each partition.
+    *  4. the driver merges the survivors by `(cos desc, nn_id)`.
+    *
+    * The query batch and the |q|·k result live on the driver. The index
+    * stays distributed and is not cell-partitioned: the scan reads every
+    * partition and filters on the cell. A multi-assigned index
+    * ([[ivfAssignMulti]]) can surface a neighbor once per probed home
+    * cell; `multiAssigned` keeps one slot per `nn_id` before each
+    * truncation to k, so a duplicate never shrinks the effective k.
+    * Ids and cells must be integral; centroid ids must be non-null. */
   def ivfProbe(index: DataFrame, queries: DataFrame, cents: DataFrame,
                maxQueryId: Long = 10, k: Int = 3, nProbe: Int = 2,
                multiAssigned: Boolean = false): DataFrame = {
+    val cidAt = cents.schema.fieldIndex("cid")
+    val ceAt = cents.schema.fieldIndex("ce")
+    val centroids = cents.collect().map { r =>
+      require(!r.isNullAt(cidAt), "IVF centroid ids must be non-null")
+      (r.get(cidAt), vector(r, ceAt))
+    }
     val q = queries.where(col("vec_id") < maxQueryId)
-      .select(col("vec_id").as("qid"), col("emb").as("qe"))
-    val wProbe = Window.partitionBy(col("qid")).orderBy(col("qsim").desc, col("cid"))
-    val probes = q.join(broadcast(cents))
-      .select(col("qid"), col("qe"), col("cid"),
-        cosine(col("qe"), col("ce")).as("qsim"))
-      .withColumn("rn", row_number().over(wProbe)).where(col("rn") <= nProbe)
-      .select(col("qid"), col("qe"), col("cid").as("cell"))
+      .select(col("vec_id"), col("emb")).collect()
+    val qids = q.map(r => asLong(r.get(0)))
+    val qvecs = q.map(vector(_, 1))
+    // cell -> the queries probing it (once per probe, as the join had
+    // it); cells rank like hits: (similarity desc, cid)
+    val byCell: Map[Long, Array[Int]] = qvecs.indices.flatMap { qi =>
+      centroids.map { case (cid, ce) => Hit(cid, pinnedCosine(qvecs(qi), ce)) }
+        .sorted(hitRank).take(nProbe).map(_.id -> qi)
+    }.groupBy(_._1).map { case (cid, qs) => cid -> qs.map(_._2).toArray }
 
-    // scan ONLY the probed cells. Single-assignment index: a vector
-    // lives in exactly one cell, no neighbor can surface twice. A
-    // multi-assigned index ([[ivfAssignMulti]]) CAN surface a neighbor
-    // once per probed home cell — without the dedup a duplicated
-    // candidate would occupy two of the top-k slots and silently
-    // shrink the effective k.
-    val wTop = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("nn_id"))
-    val cand0 = probes.join(index, "cell")
-      .where(col("qid") =!= col("vec_id"))
-      .select(col("qid"), col("vec_id").as("nn_id"),
-        cosine(col("qe"), col("emb")).as("cos"))
-    val cand = if (multiAssigned) cand0.dropDuplicates("qid", "nn_id") else cand0
-    cand
-      .withColumn("rn", row_number().over(wTop)).where(col("rn") <= k)
-      .select("qid", "nn_id", "cos")
+    val idField = index.schema("vec_id")
+    val (idAt, embAt, cellAt) = (index.schema.fieldIndex("vec_id"),
+      index.schema.fieldIndex("emb"), index.schema.fieldIndex("cell"))
+    val (idType, cellType) = (idField.dataType, index.schema("cell").dataType)
+    val survivors = index.queryExecution.toRdd.mapPartitions { rows =>
+      val top = Array.fill(qids.length)(new TopK(k, multiAssigned))
+      rows.foreach { r =>
+        if (!r.isNullAt(cellAt) && !r.isNullAt(idAt))
+          byCell.get(asLong(r.get(cellAt, cellType))).foreach { qs =>
+            val nn = r.get(idAt, idType)
+            val emb = if (r.isNullAt(embAt)) null else r.getArray(embAt)
+            qs.foreach { qi =>
+              if (qids(qi) != asLong(nn)) top(qi).offer(Hit(nn, pinnedCosine(qvecs(qi), emb)))
+            }
+          }
+      }
+      top.iterator.zipWithIndex.flatMap { case (t, qi) => t.hits.map(qi -> _) }
+    }.collect().groupBy(_._1)
+
+    val out = q.indices.flatMap { qi =>
+      val hits = survivors.getOrElse(qi, Array.empty[(Int, Hit)]).map(_._2).sorted(hitRank)
+      (if (multiAssigned) hits.distinctBy(_.id) else hits).take(k)
+        .map(h => Row(q(qi).get(0), h.nn, h.cos))
+    }
+    val schema = StructType(Seq(
+      StructField("qid", queries.schema("vec_id").dataType, queries.schema("vec_id").nullable),
+      StructField("nn_id", idField.dataType, idField.nullable),
+      StructField("cos", DoubleType, nullable = true)))
+    index.sparkSession.createDataFrame(out.asJava, schema)
+  }
+
+  private def asLong(v: Any): Long = v.asInstanceOf[Number].longValue
+
+  /** An `array<double>` column of a collected row as kernel input (NULL
+    * stays null; NULL elements stay NULL). */
+  private def vector(r: Row, i: Int): ArrayData =
+    if (r.isNullAt(i)) null else new GenericArrayData(r.getSeq[Any](i).toArray)
+
+  /** The plan's `fx(graft_cosine(a, b), 6)`, evaluated in place. */
+  private def pinnedCosine(a: ArrayData, b: ArrayData): java.lang.Double =
+    if (a == null || b == null) null
+    else {
+      val c = graft.functions.VecMath.cosineBoxed(a, b)
+      if (c == null) null else java.lang.Double.valueOf(fx(c.doubleValue, 6))
+    }
+
+  /** One probe candidate: the index's `vec_id` as stored (or a cell's
+    * `cid`), its pinned cosine. */
+  private final case class Hit(nn: Any, cos: java.lang.Double) {
+    def id: Long = asLong(nn)
+  }
+
+  /** Result order: `(cos desc, nn_id)`, with Spark's NULLS LAST for a
+    * descending key. */
+  private val hitRank: Ordering[Hit] = new Ordering[Hit] {
+    def compare(a: Hit, b: Hit): Int = {
+      val bySim =
+        if (a.cos == null) { if (b.cos == null) 0 else 1 }
+        else if (b.cos == null) -1
+        else SQLOrderingUtil.compareDoubles(b.cos, a.cos)
+      if (bySim != 0) bySim else java.lang.Long.compare(a.id, b.id)
+    }
+  }
+
+  /** The best k candidates of one query seen so far in a partition (a
+    * heap with the worst on top); `distinct` keeps one slot per id. */
+  private final class TopK(k: Int, distinct: Boolean) {
+    private val heap = new java.util.PriorityQueue[Hit](math.max(k, 1), hitRank.reverse)
+    private val ids = scala.collection.mutable.HashSet.empty[Long]
+    def offer(h: Hit): Unit =
+      if (k > 0 && !(distinct && ids.contains(h.id))) {
+        if (heap.size == k) {
+          if (!hitRank.lt(h, heap.peek)) return
+          ids -= heap.poll().id
+        }
+        heap.add(h)
+        if (distinct) ids += h.id
+      }
+    def hits: Iterator[Hit] = heap.iterator.asScala
   }
 
   /** IVF-PQ ANN top-k (Jégou et al. 2011, "Product Quantization for

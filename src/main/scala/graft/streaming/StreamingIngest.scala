@@ -1474,7 +1474,9 @@ object StreamingIngest {
       .map(_.getAbsolutePath).sorted
     require(incrementDirs.nonEmpty, s"no index increments under $work/increments")
     val index = spark.read.parquet(incrementDirs.toIndexedSeq: _*)
-    val out = Similarity.ivfProbe(index, all, cents).localCheckpoint(true)
+    // the probe is eager and returns local rows: nothing in `out`
+    // reads `cents` once it returns
+    val out = Similarity.ivfProbe(index, all, cents)
     graft.ops.Dedup.releaseOwnCheckpoint(cents)
     out
   }

@@ -753,6 +753,155 @@ class OpsSpec extends SparkTestBase {
     assert(a == b)
   }
 
+  /** The window/join plan `Similarity.ivfProbe` ran before the probe
+    * became eager: a broadcast centroid join, a `row_number` window for
+    * the probed cells, an equi-join of the index on the cell id, and a
+    * second window for the top-k. Kept only as the reference the probe
+    * is pinned to. */
+  private def referenceIvfProbe(index: DataFrame, queries: DataFrame, cents: DataFrame,
+                                maxQueryId: Long, k: Int, nProbe: Int,
+                                multiAssigned: Boolean): DataFrame = {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
+    def cosine(a: Column, b: Column): Column =
+      graft.functions.Portable.fx(graft.functions.VecMath.cosine(a, b), 6)
+    val q = queries.where(col("vec_id") < maxQueryId)
+      .select(col("vec_id").as("qid"), col("emb").as("qe"))
+    val wProbe = Window.partitionBy(col("qid")).orderBy(col("qsim").desc, col("cid"))
+    val probes = q.join(broadcast(cents))
+      .select(col("qid"), col("qe"), col("cid"), cosine(col("qe"), col("ce")).as("qsim"))
+      .withColumn("rn", row_number().over(wProbe)).where(col("rn") <= nProbe)
+      .select(col("qid"), col("qe"), col("cid").as("cell"))
+    val wTop = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("nn_id"))
+    val cand0 = probes.join(index, "cell")
+      .where(col("qid") =!= col("vec_id"))
+      .select(col("qid"), col("vec_id").as("nn_id"), cosine(col("qe"), col("emb")).as("cos"))
+    val cand = if (multiAssigned) cand0.dropDuplicates("qid", "nn_id") else cand0
+    cand.withColumn("rn", row_number().over(wTop)).where(col("rn") <= k)
+      .select("qid", "nn_id", "cos")
+  }
+
+  /** `(qid, nn_id, cos bits)` rows, sorted: a row-for-row, bit-for-bit
+    * comparable form of a probe result (NULL cos stays None). */
+  private def probeRows(df: DataFrame): Seq[(Long, Long, Option[Long])] =
+    df.collect().toSeq.map(r => (r.getLong(0), r.getLong(1),
+      if (r.isNullAt(2)) None else Some(java.lang.Double.doubleToRawLongBits(r.getDouble(2)))))
+      .sorted
+
+  test("eager IVF probe equals the window/join reference row for row, incl. edge cases") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
+    val vecSchema = StructType(Seq(StructField("vec_id", LongType),
+      StructField("emb", ArrayType(DoubleType))))
+    def frame(rows: Seq[(Long, Seq[Double])]): DataFrame =
+      spark.createDataFrame(rows.map { case (id, v) => Row(id, v) }.asJava, vecSchema)
+    var sawTie, sawNull, sawShort, sawSelf = false
+    for (seed <- 1 to 3) {
+      val rnd = new scala.util.Random(seed)
+      // small integer components: many vectors share a direction, so
+      // pinned cosines tie exactly and the nn_id tie-break decides
+      def v(): Seq[Double] = Seq.fill(3)((rnd.nextInt(7) - 3).toDouble)
+      val base = (0L until 40L).map(i => i -> v())
+      val vecs = base ++ Seq(
+        40L -> base(3)._2, 41L -> base(3)._2, // exact duplicates of vector 3
+        42L -> Seq(0.0, 0.0, 0.0),            // zero norm: NaN cosine, pinned
+        43L -> Seq(1.0, 2.0))                 // length mismatch: NULL cosine
+      val e = frame(vecs)
+      val cents0 = frame((0L until 5L).map(c => c -> v().map(_ + 0.5)))
+        .select(col("vec_id").as("cid"), col("emb").as("ce"))
+      // cell 99 is added after the index was built, so it holds no
+      // vectors; query 52 points straight at it
+      val cents = cents0.unionByName(frame(Seq(99L -> Seq(0.0, 0.0, 1.0)))
+        .select(col("vec_id").as("cid"), col("emb").as("ce")))
+      val queries = e.where(col("vec_id") < 10) // ids that are also index ids
+        .unionByName(frame(Seq(50L -> Seq(0.0, 0.0, 0.0), 51L -> Seq(1.0, 1.0),
+          52L -> Seq(0.0, 0.0, 5.0), 60L -> v(), 61L -> v()))) // 60, 61: past the cut
+      for (multi <- Seq(false, true)) {
+        val index = Similarity.ivfAssignMulti(e, cents0, dup = if (multi) 2 else 1)
+        // both copies of a multi-assigned vector share a partition here,
+        // so a per-partition top-k that truncated before its dedup would
+        // lose neighbors
+        val layouts = Seq(index.coalesce(1), index.repartition(3, col("vec_id")))
+        for ((k, nProbe) <- Seq((1, 1), (2, 2), (3, 3), (50, 7))) {
+          val ref = referenceIvfProbe(index, queries, cents, 55L, k, nProbe, multi)
+          val want = probeRows(ref)
+          layouts.foreach { ix =>
+            val got = Similarity.ivfProbe(ix, queries, cents, maxQueryId = 55L,
+              k = k, nProbe = nProbe, multiAssigned = multi)
+            assert(got.schema == ref.schema)
+            assert(probeRows(got) == want,
+              s"seed $seed multi $multi k $k nProbe $nProbe: ${probeRows(got)} != $want")
+          }
+          assert(want.forall(_._1 < 55L), "the maxQueryId cut must drop queries 60, 61")
+          if (nProbe == 1) assert(!want.exists(_._1 == 52L), "query 52 probes only the empty cell")
+          if (k == 50) {
+            sawShort ||= want.groupBy(_._1).values.exists(_.size < k)
+            sawSelf ||= !want.exists(r => r._1 == r._2) && want.exists(_._1 < 10)
+          }
+          sawTie ||= want.groupBy(r => (r._1, r._3)).values.exists(_.size > 1)
+          sawNull ||= want.exists(_._3.isEmpty)
+        }
+      }
+    }
+    assert(sawTie && sawNull && sawShort && sawSelf,
+      s"fixture must reach ties $sawTie, NULL cosines $sawNull, k > candidates $sawShort, " +
+        s"self-exclusion $sawSelf")
+  }
+
+  test("IVF probe over a cached index: at most two jobs and no shuffle stage") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+    import org.apache.spark.scheduler._
+    import scala.jdk.CollectionConverters._
+    val e = emb.select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
+    val cents = e.where(col("vec_id") < 16)
+      .select(col("vec_id").as("cid"), col("emb").as("ce")).localCheckpoint(true)
+    val index = Similarity.ivfAssign(e, cents).persist()
+    index.count()
+    // a request's query batch arrives as local rows, as a caller sends it
+    val queries = spark.createDataFrame(
+      e.where(col("vec_id") >= 100 && col("vec_id") < 104).collect().toSeq.asJava, e.schema)
+    val jobs = new AtomicInteger
+    val shuffleTasks = new AtomicInteger
+    val shuffleBytes = new AtomicLong
+    val drained = new CountDownLatch(1)
+    val sentinel = "ivf-probe-guard-sentinel"
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == sentinel))
+          drained.countDown()
+        else { jobs.incrementAndGet(); () }
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
+        if (t.taskType == "ShuffleMapTask") shuffleTasks.incrementAndGet()
+        Option(t.taskMetrics).foreach { m =>
+          shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten +
+            m.shuffleReadMetrics.totalBytesRead); ()
+        }
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val got = Similarity.ivfProbe(index, queries, cents, maxQueryId = 200, k = 5, nProbe = 3)
+      // events reach a listener in order: once the sentinel job's start
+      // arrives, every event of the probe has arrived before it
+      spark.sparkContext.setJobGroup(sentinel, sentinel)
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.clearJobGroup()
+      assert(drained.await(60, TimeUnit.SECONDS), "listener bus did not drain")
+      val (nJobs, nShuffleTasks, nShuffleBytes) = (jobs.get, shuffleTasks.get, shuffleBytes.get)
+      assert(nJobs >= 1 && nJobs <= 2, s"the probe ran $nJobs jobs")
+      assert(nShuffleTasks == 0 && nShuffleBytes == 0,
+        s"the probe shuffled: $nShuffleTasks shuffle-map tasks, $nShuffleBytes bytes")
+      assert(got.collect().length == 4 * 5)
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      index.unpersist()
+    }
+  }
+
   test("IVF-PQ: ADC ranking recalls same-cell exact-L2 neighbors, no cartesian") {
     import spark.implicits._
     import org.apache.spark.sql.functions._

@@ -50,6 +50,46 @@ class PortableSpec extends SparkTestBase {
     assert(got(2) == 1.0, s"fx(1.005, 2) = ${got(2)}") // 1.005·100 = 100.4999…
   }
 
+  test("the scalar fx twin equals the Column fx bit for bit") {
+    // random doubles of every magnitude and sign, arbitrary bit patterns
+    // (NaN payloads, subnormals), the specials, and 2.675-class ties
+    // (x·10^n landing on or next to .5) — compared by raw bits, so a
+    // -0.0 against 0.0 counts as a difference
+    val rnd = new scala.util.Random(41)
+    val specials = Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity,
+      -0.0, 0.0, Double.MinPositiveValue, -Double.MinPositiveValue,
+      Double.MaxValue, -Double.MaxValue, 1e300, -1e300, 9.3e12, -9.3e12,
+      0.5, -0.5, 2.675, -2.675, 1.005, -1.005, 0.0000005, -0.0000005)
+    val ties = (0 until 500).flatMap(i => Seq((i + 0.5) / 100, -(i + 0.5) / 100,
+      (i + 0.5) / 1e6, -(i + 0.5) / 1e6))
+    val xs = specials ++ ties ++
+      Seq.fill(2000)((rnd.nextDouble() - 0.5) * math.pow(10, rnd.nextInt(30) - 10)) ++
+      Seq.fill(1000)(java.lang.Double.longBitsToDouble(rnd.nextLong()))
+    val df = xs.toDF("x")
+    for (n <- Seq(0, 2, 6)) {
+      val got = df.select(Portable.fx(col("x"), n).as("v")).collect().map(_.getDouble(0))
+      xs.zip(got).foreach { case (x, v) =>
+        val want = Portable.fx(x, n)
+        assert(java.lang.Double.doubleToRawLongBits(v) == java.lang.Double.doubleToRawLongBits(want),
+          s"fx($x, $n): Column $v, scalar twin $want")
+      }
+    }
+  }
+
+  test("the fx twin pins what this Spark returns where floor leaves the double range") {
+    // Spark's floor is BIGINT: NaN floors to 0, the infinities saturate
+    // at the Long range, and -0.0 comes back as +0.0 — the twin's
+    // `toLong` step, which `math.floor(x) / p` would not reproduce
+    val xs = Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity, -0.0, 1e300)
+    val got = xs.toDF("x").select(Portable.fx(col("x"), 6).as("v"))
+      .collect().map(_.getDouble(0)).toSeq
+    val want = Seq(0.0, Long.MaxValue / 1e6, Long.MinValue / 1e6, 0.0, Long.MaxValue / 1e6)
+    assert(got.map(java.lang.Double.doubleToRawLongBits) ==
+      want.map(java.lang.Double.doubleToRawLongBits), s"Column fx returned $got")
+    assert(xs.map(Portable.fx(_, 6)).map(java.lang.Double.doubleToRawLongBits) ==
+      want.map(java.lang.Double.doubleToRawLongBits))
+  }
+
   test("no oracle SQL contains engine-divergent rounding") {
     // round( is banned from every oracle (the r7 failure class); and
     // every floor-scale multiply must carry the +0.5 half-up term — a
